@@ -58,22 +58,10 @@ def davg2(col: Column | str, precision: int = 18) -> Column:
 # -- reference scalar surface (§2.7) ----------------------------------------
 
 
-def digits_only(col: Column | str) -> Column:
-    """`.isdigit()` (main.py:69): true iff the string is all digits."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike("^[0-9]+$")
-
-
 def bool_to_int(col: Column | str) -> Column:
     """`convert_boolean` (Gonukkad_Merchants.py:71-72): bool → 0/1."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("int")
-
-
-def with_sentinel(col: Column | str, sentinel: str = NOT_FOUND) -> Column:
-    """C2 sentinel defaulting: value if present else 'Not_Found' (main.py:501-568)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(sentinel))
 
 
 def lossy_int(col: Column | str) -> Column:

@@ -117,42 +117,12 @@ def _shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _gram_arrays(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, _grams) with the distinct-shingle array materialized per doc.
-
-    Docs too short to shingle (< n tokens → zero n-grams) are dropped
-    HERE, on the cheap token-array size — exactly the rows an
-    ``explode`` of the gram array would have dropped — so the heavy
-    ngram/hash expressions are never inlined into a filter condition
-    (the ngrams_from_tokens perf note) and never run on unusable rows.
-    The threshold derives from the same ``n`` as the gram definition
-    (ADVICE r10: a hardcoded 3 desyncs for n > 3 and would emit rows
-    with NULL signatures instead of dropping them).
-    """
-    return (
-        df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-        .where(F.size("_toks") >= n)
-        .select(
-            F.col(id_col), ngrams_from_tokens(F.col("_toks"), n).alias("_grams")
-        )
-    )
-
-
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, parallelism: int | None = None
-) -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact duplicate groups by md5 fingerprint of normalized text.
 
     Returns (fingerprint, rep_id, dup_count): representative = min id.
     One shuffle on the digest; never compares full texts.
-    ``parallelism``: spread the md5+normalize work when the source scan
-    yields too few partitions (single-row-group local files); at 100 TB the
-    scan is already wide and this stays None (see minhash_signature).
     """
-    if parallelism:
-        df = df.repartition(parallelism)
     return (
         df.select(F.col(id_col), F.md5(normalize(text_col)).alias("fingerprint"))
         .groupBy("fingerprint")
@@ -168,7 +138,6 @@ def minhash_signature(
     id_col: str,
     text_col: str,
     n_seeds: int = N_SEEDS,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """MinHash signature: (id, mh0..mh{n-1}).
 
@@ -186,14 +155,7 @@ def minhash_signature(
     where AQE cannot rebalance it (the phash/simhash cliff, ADVICE r10).
     Values are bit-identical either way (min over the same
     distinct-shingle set, same integer arithmetic).
-
-    ``parallelism``: repartition the input first.  Set it when the source is
-    a small file count (a single parquet file reads as one partition and the
-    CPU-heavy hashing would run on one core); leave None when the input is
-    already well-partitioned (100 TB scans are).
     """
-    if parallelism:
-        df = df.repartition(parallelism)
     sh = _shingles(df, id_col, text_col).withColumn("h", base_hash("shingle"))
     aggs = [
         F.min(perm_hash(F.col("h"), s)).alias(f"mh{s}") for s in range(n_seeds)
@@ -303,9 +265,7 @@ def jaccard(col_a: Column, col_b: Column) -> Column:
     )
 
 
-def simhash32(
-    df: DataFrame, id_col: str, text_col: str, parallelism: int | None = None
-) -> DataFrame:
+def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """32-bit SimHash from md5-derived shingle hashes.
 
     For each bit: sum(+1 if set else −1) over the doc's shingles; bit set
@@ -318,10 +278,8 @@ def simhash32(
     on d5 at sf0.1 (driver bench), the exact cliff the phash stub's
     round-10 note recorded for dense shingle sets.  Values are
     bit-identical either way (±1 sums over the same distinct-shingle
-    set).  ``parallelism``: see minhash_signature.
+    set).
     """
-    if parallelism:
-        df = df.repartition(parallelism)
     sh = _shingles(df, id_col, text_col).withColumn("h", h32("shingle", 0))
     aggs = [
         F.sum(

@@ -23,19 +23,19 @@ one row per node).
 from __future__ import annotations
 
 import warnings
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import ckpt
+from ..session import default_parallelism, shuffle_partitions
 
 # Shuffle sizing for the iterative loops (round 11).  The loops know the
 # EXACT row count of their checkpointed state (the convergence probes
 # collect it anyway), so the per-round shuffles can be sized from
 # MEASURED bytes instead of the session constant: partitions =
-# ceil(measured_bytes / 64 MB), never raised above the session setting.
-# At bench scale this collapses the per-round micro-shuffles to one
+# ceil(measured_bytes / 64 MB), never raised above the engine's shuffle
+# width.  At bench scale this collapses the per-round micro-shuffles to one
 # partition (A/B at sf0.1: 0.59 s/round vs 0.88 s with the session's 32
 # — the round is pure stage-scheduling latency, guide §2.2's "fewer,
 # larger partitions" taken to its measured floor); at 100 TB the same
@@ -46,23 +46,12 @@ from ..ckpt import ckpt
 _LOOP_PARTITION_BYTES = 64 << 20
 
 
-@contextmanager
-def _sized_loop_shuffle(df: DataFrame, n_rows: int):
-    """Scope ``spark.sql.shuffle.partitions`` to the measured size of the
-    loop state for the actions run inside the context."""
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+def _loop_partitions(df: DataFrame, n_rows: int) -> int:
+    """Shuffle width for a loop round over ``n_rows`` rows shaped like
+    ``df``; the round runs inside ``shuffle_partitions`` of this width."""
     width = 16 + 8 * len(df.columns)
-    p = max(1, -(-(n_rows * width) // _LOOP_PARTITION_BYTES))
-    try:
-        p = min(p, int(old))
-    except (TypeError, ValueError):
-        pass
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    n = -(-(n_rows * width) // _LOOP_PARTITION_BYTES)
+    return min(default_parallelism(), max(1, n))
 
 
 _NUMERIC_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
@@ -244,7 +233,7 @@ def connected_components(
         return row["s"]
 
     # first probe also measures the (fixed) node count, which sizes every
-    # round's shuffles — see _sized_loop_shuffle.
+    # round's shuffles — see _loop_partitions.
     first = labels.agg(
         F.count("*").alias("n"),
         F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
@@ -266,9 +255,9 @@ def connected_components(
             F.col("a").alias("id"), F.col("component")
         )
         # the sized-shuffle scope must cover the localCheckpoint call
-        # (physical planning — where shuffle.partitions is read —
-        # happens there, not at the collect).
-        with _sized_loop_shuffle(labels, n_nodes):
+        # (physical planning happens there, not at the collect).
+        width = _loop_partitions(labels, n_nodes)
+        with shuffle_partitions(labels.sparkSession, width):
             new_labels = (
                 labels.unionByName(nbr)
                 .groupBy("id")
@@ -390,10 +379,10 @@ def connected_components_alternating(
     for _ in range(max_iter):
         # both stars never increase the edge count, so the incoming
         # round's digest count bounds both stages' relations — it sizes
-        # the round's shuffles (see _sized_loop_shuffle; the scope covers
-        # the localCheckpoint call because physical planning reads
-        # shuffle.partitions there).
-        with _sized_loop_shuffle(cur, 2 * digest[0]):
+        # the round's shuffles (see _loop_partitions; the scope covers
+        # the localCheckpoint call because physical planning happens there).
+        width = _loop_partitions(cur, 2 * digest[0])
+        with shuffle_partitions(cur.sparkSession, width):
             nxt = _star(_star(cur, large=True), large=False).transform(ckpt)
             nxt_digest = _edge_digest(nxt)
         cur = nxt
@@ -484,7 +473,8 @@ def bfs_hops(
         via = sym.join(d, sym["a"] == d["id"]).select(
             F.col("b").alias("id"), (F.col("hops") + 1).alias("hops")
         )
-        with _sized_loop_shuffle(sym, n_sym + prev[0]):
+        width = _loop_partitions(sym, n_sym + prev[0])
+        with shuffle_partitions(sym.sparkSession, width):
             new_dist = (
                 dist.unionByName(via)
                 .groupBy("id")

@@ -79,16 +79,6 @@ def pil_available() -> bool:
         return False
 
 
-def soundfile_available() -> bool:
-    """True iff the preferred audio codec (soundfile) is importable."""
-    try:
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _parse_y4m(payload: bytes) -> tuple[int, int, int]:
     """Parse an uncompressed YUV4MPEG2 (y4m) stream: (width, height,
     n_frames).
@@ -268,22 +258,13 @@ def decode_stub_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         )
 
 
-def extract_features(
-    assets: DataFrame,
-    parallelism: int | None = None,
-    use_real_codec: bool = False,
-) -> DataFrame:
+def extract_features(assets: DataFrame, use_real_codec: bool = False) -> DataFrame:
     """Run the decode/feature stage over an asset table.
 
-    ``parallelism``: spread the Python workers when the upstream scan has
-    too few partitions (local single-row-group files); a real 100 TB scan
-    is already wide — leave None and the decode inherits its partitioning.
     ``use_real_codec``: route through the PIL-backed stage (only where PIL
     exists and the payloads are genuine images); default stays the
     deterministic stub — the contract the mm* oracles recompute.
     """
-    if parallelism:
-        assets = assets.repartition(parallelism)
     stage = decode_real_features if use_real_codec else decode_stub_features
     return assets.mapInPandas(stage, FEATURE_SCHEMA)
 
@@ -330,14 +311,12 @@ def chunk_audio_stub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def chunk_audio(assets: DataFrame, parallelism: int | None = None) -> DataFrame:
+def chunk_audio(assets: DataFrame) -> DataFrame:
     """Window every AUDIO asset into overlapping chunks (1 row per chunk).
 
     The media_type filter runs scan-side BEFORE the Python stage — at
     100 TB only audio blobs ever cross the Arrow boundary."""
     audio = assets.where(F.col("media_type") == "audio")
-    if parallelism:
-        audio = audio.repartition(parallelism)
     return audio.mapInPandas(chunk_audio_stub, CHUNK_SCHEMA)
 
 
@@ -383,15 +362,13 @@ def resize_plan_stub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def plan_resizes(assets: DataFrame, parallelism: int | None = None) -> DataFrame:
+def plan_resizes(assets: DataFrame) -> DataFrame:
     """Plan aspect-preserving resizes for every IMAGE asset.
 
     Like ``chunk_audio``, the media_type filter runs scan-side so only
     image blobs cross the Arrow boundary; the stage is 1→1 and stateless,
-    so it inherits (or widens to) the scan's partitioning."""
+    so it inherits the partitioning of its input."""
     images = assets.where(F.col("media_type") == "image")
-    if parallelism:
-        images = images.repartition(parallelism)
     return images.mapInPandas(resize_plan_stub, RESIZE_SCHEMA)
 
 
@@ -442,7 +419,7 @@ def sample_video_frames_stub(
         )
 
 
-def sample_video_frames(assets: DataFrame, parallelism: int | None = None) -> DataFrame:
+def sample_video_frames(assets: DataFrame) -> DataFrame:
     """Sample presentation-timestamped frames from every VIDEO asset.
 
     The media_type filter runs scan-side BEFORE the Python stage — at
@@ -450,8 +427,6 @@ def sample_video_frames(assets: DataFrame, parallelism: int | None = None) -> Da
     bounds output cardinality at 8× the video count regardless of clip
     length."""
     video = assets.where(F.col("media_type") == "video")
-    if parallelism:
-        video = video.repartition(parallelism)
     return video.mapInPandas(sample_video_frames_stub, FRAME_SCHEMA)
 
 
@@ -459,7 +434,6 @@ def phash32_stub(
     assets: DataFrame,
     id_col: str = "asset_id",
     content_col: str = "content",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """32-bit perceptual-hash STUB over binary content → (id, phash).
 
@@ -475,16 +449,10 @@ def phash32_stub(
     ``aggregate`` folds cost more than the codegen'd explode+partial-agg
     plus its doc-scaled exchange.  Round 11 confirmed the same cliff for
     text — the driver measured d5 0.67x — so dedup.simhash32 is back on
-    the explode+groupBy form too.)
-    ``parallelism``: repartition the assets first (round 11).  The
-    hex-trigram pass is the densest hashing stage in the engine (~1 md5
-    per 2 payload bytes), and a single-row-group local parquet scan
-    would run it all on ONE core — the same documented spread knob as
-    ``minhash_signature``; leave None when the source scan is already
-    wide (100 TB scans are).
+    the explode+groupBy form too.)  The hex-trigram pass is the densest
+    hashing stage in the engine (~1 md5 per 2 payload bytes), so callers
+    over a narrow scan pass ``session.spread(assets)``.
     """
-    if parallelism:
-        assets = assets.repartition(parallelism)
     hx = assets.select(
         F.col(id_col), F.hex(F.col(content_col)).alias("hx")
     ).where(F.length("hx") >= 6)

@@ -54,17 +54,12 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     k: int = 5,
     round_to: int = 6,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per query: (query_id, neighbor_id, sim, rank).
 
     Broadcast the query side; rank with a deterministic tie-break
     (sim desc, neighbor id asc).  Self-matches excluded.
-    ``parallelism``: repartition the corpus first (for few-file sources
-    whose scan yields too few partitions to spread the dot products).
     """
-    if parallelism:
-        corpus = corpus.repartition(parallelism)
     # Round 10: norms are per-ROW, so compute them once on each side
     # before the pair fan-out.  The inlined cosine() evaluated norm(a)
     # and norm(b) TWICE per pair (once in the zero-norm guard, once in
@@ -278,7 +273,6 @@ def knn_ivf(
     n_centroids: int = 8,
     nprobe: int = 2,
     round_to: int = 6,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN top-k: partition the corpus into centroid
     cells, probe only the query's ``nprobe`` nearest cells.
@@ -294,8 +288,6 @@ def knn_ivf(
     all of it.  Candidate generation is an equality join on the cell id
     with the (small) probe set broadcast.
     """
-    if parallelism:
-        corpus = corpus.repartition(parallelism)
     cents = (
         corpus.where(F.col(id_col) < n_centroids)
         .select(
@@ -346,7 +338,6 @@ def knn_lsh_bucketed(
     k: int = 3,
     n_bits: int = 8,
     round_to: int = 6,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """ANN top-k within the query's sign-LSH bucket (the scale path).
 
@@ -354,8 +345,6 @@ def knn_lsh_bucketed(
     corpus is written bucketed/partitioned by this key, so the probe reads
     one partition per query instead of the full corpus.
     """
-    if parallelism:
-        corpus = corpus.repartition(parallelism)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),

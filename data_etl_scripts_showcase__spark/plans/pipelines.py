@@ -17,6 +17,7 @@ from ..enrichment import enrich, mock_fetch_page
 from ..enrichment.stage import METRICS
 from ..functions import NOT_FOUND, bool_to_int, iso_ts
 from ..sinks import reconcile, write_snapshot
+from ..session import spread
 from ..sources import load_table
 
 
@@ -239,7 +240,7 @@ def enrichment_pipeline(
     keys = customer.select(F.col("c_custkey").alias("merchant_id"))
     if limit_keys:
         keys = keys.where(F.col("merchant_id") < limit_keys)
-    keys = keys.repartition(spark.sparkContext.defaultParallelism)
+    keys = spread(keys)
 
     # Persist the SHREDDED frame, not the raw enrichment: the QA gate and
     # the final write both consume `wide`, so caching upstream of the shred

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as DD
 from ..operators.similarity import cosine, dot, norm
 from .text_analysis import QUALITY_SQL
+from ..session import spread
 from ..sources import load_table
 from . import register
 from ..ckpt import ckpt
@@ -82,10 +83,9 @@ _CAND_SQL = """
 def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate groups: md5(normalized text) → representative + count."""
     return DD.exact_dedup(
-        load_table(spark, sf_dir, "documents"),
+        spread(load_table(spark, sf_dir, "documents")),
         "doc_id",
         "text",
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -97,10 +97,9 @@ def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d2_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-seed MinHash signature per document (one explode + one groupBy)."""
     return DD.minhash_signature(
-        load_table(spark, sf_dir, "documents"),
+        spread(load_table(spark, sf_dir, "documents")),
         "doc_id",
         "text",
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -113,9 +112,7 @@ def d3_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: docs sharing any (band, bucket) — near-linear
     candidate generation instead of O(n²)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     return DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
 
 
@@ -142,9 +139,7 @@ def d4_jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(
         F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a")
@@ -184,10 +179,9 @@ _SIMHASH_CTE = f"""
 def d5_simhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (32 conditional sums in one groupBy)."""
     return DD.simhash32(
-        load_table(spark, sf_dir, "documents"),
+        spread(load_table(spark, sf_dir, "documents")),
         "doc_id",
         "text",
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -210,9 +204,7 @@ def d6_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle/bucketing key so each executor compares only its block.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = DD.simhash32(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sh = DD.simhash32(spread(docs), "doc_id", "text")
     ds = docs.select("doc_id", "source").join(sh, "doc_id")
     a = ds.select(
         F.col("source"),
@@ -259,7 +251,7 @@ def d7_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     small side at test SF and shifts to a shuffled label join past the
     threshold."""
     e = load_table(spark, sf_dir, "embeddings")
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
+    a = spread(e).select(
         F.col("label"),
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("vec_a"),
@@ -322,9 +314,7 @@ def d8_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -385,9 +375,7 @@ def d9_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -522,9 +510,7 @@ def d11_editdistance_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     small side, so both text joins broadcast it."""
     docs = load_table(spark, sf_dir, "documents")
     nt = docs.select("doc_id", DD.normalize("text").alias("ntext"))
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     na = nt.select(F.col("doc_id").alias("id_a"), F.col("ntext").alias("ntext_a"))
     nb = nt.select(F.col("doc_id").alias("id_b"), F.col("ntext").alias("ntext_b"))
@@ -637,7 +623,7 @@ def d12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forcing broadcast() here would pin the corpus into every executor.
     # dot/(na·nb) is the same float-op sequence as cosine(), and the
     # 6-dp round keeps the verdict order-insensitive.
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
+    a = spread(e).select(
         "label",
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("va"),
@@ -730,9 +716,7 @@ def d13_cross_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__seen", F.lit(True))
     )
     new_docs = docs.where(F.col("doc_id") % 5 != 0).select("doc_id", fp.alias("fp"))
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     buckets = DD.lsh_buckets(sig, "doc_id").transform(ckpt)  # round 10: new/old probe sides both read the banded index — one
     # compute of the corpus-wide shingle fold, not two (the materialized
     # LSH-index shape, same as candidate_pairs).
@@ -787,9 +771,7 @@ def d14_lsh_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets BEFORE the self-join, and ``oversized_buckets`` accounts for
     everything skipped (asserted in tests — no silent truncation)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     return DD.candidate_pairs(
         DD.lsh_buckets(sig, "doc_id"), "doc_id", max_bucket_size=2
     )
@@ -851,9 +833,7 @@ def pr1_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric candidate graph means no dangling-mass correction is
     needed (every node has out-degree ≥ 1 by construction)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     pairs = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     # Round 10 restructure (guide §2.4/§7.3, measured): the old shape
     # persisted `edges` but left its LINEAGE intact, so the 3-iteration
@@ -963,9 +943,7 @@ def d15_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -1040,9 +1018,7 @@ def d16_minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n/20)² pairs, which outran both engines at the 100x probe tier.
     The 20 floor preserves the historical test-SF sample."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     grams = docs.select("doc_id", DD.tokens("text").alias("_t")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_t")).alias("grams")
     )
@@ -1149,9 +1125,7 @@ def pr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -1226,9 +1200,7 @@ def d18_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     # Containment/Jaccard are pure size arithmetic (|A|, |B|, |A∩B|), so
     # the gram arrays that ride the candidate joins are hashed to 8-byte
@@ -1325,9 +1297,7 @@ def pr3_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation
 
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     pairs = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     out = label_propagation(pairs, "id_a", "id_b", n_iter=3)
     return out.select(F.col("id").alias("doc_id"), "community")
@@ -1384,9 +1354,7 @@ def d20_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -1487,9 +1455,7 @@ def d22_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id").withColumn(
         "is_cand", F.lit(1)
     )
@@ -1521,13 +1487,10 @@ def d22_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_distinct'ed — which skips materializing an array_union per
     # pair (2.3× of the win).
     digs = F.transform("grams", lambda g: F.xxhash64(g))
-    ga = (
-        sampled.repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            F.col("doc_id").alias("id_a"),
-            digs.alias("grams_a"),
-            F.size("grams").alias("n_a"),
-        )
+    ga = spread(sampled).select(
+        F.col("doc_id").alias("id_a"),
+        digs.alias("grams_a"),
+        F.size("grams").alias("n_a"),
     )
     gb = sampled.select(
         F.col("doc_id").alias("id_b"),

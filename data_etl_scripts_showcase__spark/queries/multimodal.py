@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import multimodal as MM
+from ..session import spread
 from ..sources import load_table
 from . import register
 
@@ -81,9 +82,7 @@ def mm2_decoded_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns only); the operator itself keeps the typed array.
     """
     assets = MM.to_assets(load_table(spark, sf_dir, "documents"), "doc_id", "text")
-    feats = MM.extract_features(
-        assets, parallelism=spark.sparkContext.defaultParallelism
-    )
+    feats = MM.extract_features(spread(assets))
     return feats.withColumn(
         "sampled_frames",
         F.array_join(
@@ -115,7 +114,7 @@ def mm3_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter to audio runs scan-side, and every chunk boundary is a pure
     function of the payload (oracle recomputes the grid in SQL)."""
     assets = MM.to_assets(load_table(spark, sf_dir, "documents"), "doc_id", "text")
-    return MM.chunk_audio(assets, parallelism=spark.sparkContext.defaultParallelism)
+    return MM.chunk_audio(spread(assets))
 
 
 @register(
@@ -166,7 +165,7 @@ def mm4_image_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes it exactly).  Scan-side media_type filter means only image
     blobs ever reach Python."""
     assets = MM.to_assets(load_table(spark, sf_dir, "documents"), "doc_id", "text")
-    return MM.plan_resizes(assets, parallelism=spark.sparkContext.defaultParallelism)
+    return MM.plan_resizes(spread(assets))
 
 
 @register(
@@ -203,9 +202,7 @@ def mm5_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     container probe (fps/frame count derived from the bytes), and a ≤8
     frames/clip cap that bounds output cardinality at any corpus size."""
     assets = MM.to_assets(load_table(spark, sf_dir, "documents"), "doc_id", "text")
-    return MM.sample_video_frames(
-        assets, parallelism=spark.sparkContext.defaultParallelism
-    )
+    return MM.sample_video_frames(spread(assets))
 
 
 @register(
@@ -433,9 +430,7 @@ def mm9_frame_feature_pooling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import h32
 
     assets = MM.to_assets(load_table(spark, sf_dir, "documents"), "doc_id", "text")
-    frames = MM.sample_video_frames(
-        assets, parallelism=spark.sparkContext.defaultParallelism
-    )
+    frames = MM.sample_video_frames(spread(assets))
     chk = assets.where(F.col("media_type") == "video").select(
         "asset_id", F.md5("content").alias("h")
     )
@@ -530,13 +525,11 @@ def mm10_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = MM.to_assets(docs, "doc_id", "text").where(
         F.col("media_type") == "image"
     )
-    # parallelism spread (round 11): the hex-trigram hashing is ~1 md5
+    # spread (round 11): the hex-trigram hashing is ~1 md5
     # per 2 payload bytes and the local single-row-group scan is
     # unsplittable — without the spread the whole stage ran on one core
     # (mm10's 8→32-core scaling ratio was 1.21 in the r10 driver bench).
-    ph = MM.phash32_stub(
-        assets, parallelism=spark.sparkContext.defaultParallelism
-    )
+    ph = MM.phash32_stub(spread(assets))
     return MM.hamming_band_pairs(ph)
 
 
@@ -586,9 +579,7 @@ def mm11_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     assets = MM.to_assets(docs, "doc_id", "text")
-    chunks = MM.chunk_audio(
-        assets, parallelism=spark.sparkContext.defaultParallelism
-    )
+    chunks = MM.chunk_audio(spread(assets))
     sums = assets.select(
         "asset_id", F.md5(F.col("content").cast("string")).alias("h")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..enrichment.stage import METRICS
 from ..plans import enrichment_pipeline
+from ..session import spread
 from ..sources import load_table
 from . import fragment, register
 
@@ -111,9 +112,7 @@ def e2_enrichment_retry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..enrichment.stage import enrich_with_retry
 
     customer = load_table(spark, sf_dir, "customer")
-    keys = customer.select(F.col("c_custkey").alias("merchant_id")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    keys = spread(customer.select(F.col("c_custkey").alias("merchant_id")))
     enriched = enrich_with_retry(keys, "merchant_id")
     return enriched.groupBy("n_attempts").agg(
         F.count("*").alias("n_keys"),
@@ -152,9 +151,7 @@ def e3_enrichment_request_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("merchant_id")
     )
-    distinct_keys = o.distinct().repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    distinct_keys = spread(o.distinct())
     enriched = enrich(distinct_keys, "merchant_id").select(
         "merchant_id", F.col("resp.title").alias("title")
     )
@@ -198,17 +195,15 @@ def e4_enrichment_cross_run_cache(spark: SparkSession, sf_dir: str) -> DataFrame
     cache_dir = tempfile.mkdtemp(prefix="e4_cache_")
     shutil.rmtree(cache_dir, ignore_errors=True)
     prior = c.where(F.col("merchant_id") % 2 == 0)
-    enrich(
-        prior.repartition(spark.sparkContext.defaultParallelism), "merchant_id"
-    ).select(
+    enrich(spread(prior), "merchant_id").select(
         "merchant_id", F.col("resp.title").alias("title")
     ).write.parquet(cache_dir)
 
     cache = spark.read.parquet(cache_dir)
     misses = c.join(cache.select("merchant_id"), "merchant_id", "left_anti")
-    fresh = enrich(
-        misses.repartition(spark.sparkContext.defaultParallelism), "merchant_id"
-    ).select("merchant_id", F.col("resp.title").alias("title"))
+    fresh = enrich(spread(misses), "merchant_id").select(
+        "merchant_id", F.col("resp.title").alias("title")
+    )
     combined = cache.withColumn("from_cache", F.lit(True)).unionByName(
         fresh.withColumn("from_cache", F.lit(False))
     )
@@ -231,7 +226,5 @@ def _frag_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.pipelines import shred_enriched
 
     customer = load_table(spark, sf_dir, "customer")
-    keys = customer.select(F.col("c_custkey").alias("merchant_id")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    keys = spread(customer.select(F.col("c_custkey").alias("merchant_id")))
     return shred_enriched(enrich(keys, "merchant_id", mock_fetch_page), "merchant_id")

@@ -31,6 +31,7 @@ from ..functions import dec2
 from ..operators.bloom import BLOOM_M, BLOOM_SEEDS, bloom_bits, bloom_probe
 from ..operators.sketches import HLL_M, HLL_SEED, hll_estimate, hll_registers
 from ..operators.zorder import zvalue, zvalue_sql
+from ..session import spread
 from ..sources import load_table
 from . import register
 from .dedup import _TOKS
@@ -306,12 +307,12 @@ def d17_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", DD.tokens("text").alias("t")).where(
         F.size("t") >= _SPAN_W
     )
-    # parallelism spread (round 11): the window pass is one md5 per token
-    # and the local single-row-group scan is unsplittable — d17's 8→32-core
-    # scaling ratio was 0.98 in the r10 driver bench because the whole
-    # explode+hash stage ran on one core.  Same documented knob as
-    # minhash_signature; a 100 TB scan is already wide and skips this.
-    toks = toks.repartition(spark.sparkContext.defaultParallelism)
+    # spread (round 11): the window pass is one md5 per token and the local
+    # single-row-group scan is unsplittable — d17's 8→32-core scaling ratio
+    # was 0.98 in the round-10 bench because the whole explode+hash stage
+    # ran on one core.  The spread is unconditional, like every registry
+    # spread; skipping it for already-wide scans would change plans.
+    toks = spread(toks)
     win = toks.select(
         "doc_id",
         F.explode(

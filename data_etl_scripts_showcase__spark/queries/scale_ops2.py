@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import spread
 from ..sources import load_table
 from . import register
 from .dedup import _BANDS_CTE, _CAND_SQL
@@ -231,9 +232,7 @@ def pr4_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -876,9 +875,7 @@ def pr5_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -1178,9 +1175,7 @@ def pr6_khop_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -1755,9 +1750,7 @@ def pr7_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
         "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
     )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -2187,9 +2180,7 @@ def x53_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id order).  Every draw is reproducible on any engine and any
     partitioning."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
+    sig = DD.minhash_signature(spread(docs), "doc_id", "text")
     cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
     nd = cand.select("id_a", "id_b").unionByName(
         cand.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))

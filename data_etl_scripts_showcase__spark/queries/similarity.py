@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as SIM
 from .text_analysis import QUALITY_SQL
+from ..session import spread
 from ..sources import load_table
 from . import register
 from ..ckpt import ckpt
@@ -43,10 +44,7 @@ def v1_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break.  This is the recall baseline for v2.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_bruteforce(
-        e.where(F.col("vec_id") < 8), e, k=5,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return SIM.knn_bruteforce(e.where(F.col("vec_id") < 8), spread(e), k=5)
 
 
 @register(
@@ -79,10 +77,7 @@ def v2_knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall for a ~2^n_bits candidate reduction.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_lsh_bucketed(
-        e.where(F.col("vec_id") < 8), e, k=3,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return SIM.knn_lsh_bucketed(e.where(F.col("vec_id") < 8), spread(e), k=3)
 
 
 _ASSIGN_CTE = f"""
@@ -139,8 +134,7 @@ def v4_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle regenerates the index; swap in k-means for production."""
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.knn_ivf(
-        e.where(F.col("vec_id") < 8), e, k=3, n_centroids=8, nprobe=2,
-        parallelism=spark.sparkContext.defaultParallelism,
+        e.where(F.col("vec_id") < 8), spread(e), k=3, n_centroids=8, nprobe=2
     )
 
 
@@ -247,11 +241,8 @@ def v6_ivf_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of every vector."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    par = spark.sparkContext.defaultParallelism
-    exact = SIM.knn_bruteforce(q, e, k=3, parallelism=par).select(
-        "query_id", "neighbor_id"
-    )
-    ivf = SIM.knn_ivf(q, e, k=3, n_centroids=8, nprobe=2, parallelism=par).select(
+    exact = SIM.knn_bruteforce(q, spread(e), k=3).select("query_id", "neighbor_id")
+    ivf = SIM.knn_ivf(q, spread(e), k=3, n_centroids=8, nprobe=2).select(
         F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_nid")
     )
     j = exact.join(
@@ -310,9 +301,7 @@ def v7_quality_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     corpus = e.join(ok, e.vec_id == ok.doc_id).select(e["*"])
     queries = e.where(F.col("vec_id") < 8)
-    return SIM.knn_bruteforce(
-        queries, corpus, k=3, parallelism=spark.sparkContext.defaultParallelism
-    )
+    return SIM.knn_bruteforce(queries, spread(corpus), k=3)
 
 
 _KM_DIST = (
@@ -468,10 +457,7 @@ def v9_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     here to keep the oracle exact."""
     e = load_table(spark, sf_dir, "embeddings")
     cand = (
-        SIM.knn_bruteforce(
-            e.where(F.col("vec_id") < 8), e, k=10,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
+        SIM.knn_bruteforce(e.where(F.col("vec_id") < 8), spread(e), k=10)
         .select(
             F.col("query_id").alias("qid"),
             F.col("neighbor_id").alias("cid"),
@@ -1349,8 +1335,7 @@ def v18_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    par = spark.sparkContext.defaultParallelism
-    exact = SIM.knn_bruteforce(q, e, k=3, parallelism=par).select(
+    exact = SIM.knn_bruteforce(q, spread(e), k=3).select(
         "query_id", "neighbor_id"
     ).transform(ckpt)  # round 10: the ground truth is used by
     # the n_q count AND the grid fan-out — the leaf runs the corpus-wide
@@ -1364,7 +1349,7 @@ def v18_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row norms hoisted out of the pair scorer (round 10, the
     # knn_bruteforce rewrite): bit-identical sims, 4 fewer interpreted
     # array folds per candidate pair.
-    cells = SIM.assign_cells(e.repartition(par), cents, 1).select(
+    cells = SIM.assign_cells(spread(e), cents, 1).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
         SIM.norm("embedding").alias("_cn"),

@@ -6,13 +6,20 @@ engine, with the 100 TB design point in mind: AQE on (runtime join
 re-selection + skew splitting + partition coalescing), UTC session timezone
 (oracle comparability), Arrow for every pandas interchange, and shuffle
 parallelism sized from the environment instead of Spark's default 200.
+
+The session is also the only place the engine's parallelism is decided:
+:func:`spread` for the per-row stages that need it, and
+:func:`shuffle_partitions` for the few scopes that need a shuffle width other
+than the session's.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -21,6 +28,33 @@ def default_parallelism() -> int:
     if env:
         return max(1, int(env))
     return os.cpu_count() or 8
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the cluster's default parallelism.
+
+    A local parquet file with a single row group is read as ONE partition,
+    so a CPU-heavy per-row stage over it (hashing, shingling, Python UDFs)
+    would run on one core; spreading first puts it on all of them.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` inside the block and
+    restore the session value after it, also on error.
+
+    Physical planning reads the setting, so the block must cover the call
+    that plans the work: a checkpoint, an action, or a streaming drain's
+    start and await.
+    """
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _half_mem(mem: str) -> str:

@@ -33,13 +33,13 @@ def write_snapshot(
 
     Dynamic partition overwrite: only the written date is replaced
     (idempotent daily re-runs — what the reference's rename sweep tried to
-    approximate).
+    approximate).  It is a per-write option, so the session's own overwrite
+    mode is left as it was.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn(DS_COL, F.lit(ds))
         .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .format(fmt)
         .partitionBy(DS_COL)
         .save(base_path)

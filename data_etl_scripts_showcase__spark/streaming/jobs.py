@@ -21,44 +21,28 @@ from __future__ import annotations
 import os as _os
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dec2, ntz_epoch_us
 from ..ckpt import ckpt
+from ..session import shuffle_partitions
 
 #: State partitioning for the fresh-checkpoint drains below (VERDICT r8
 #: #5).  Stateful operators create one state-store instance PER SHUFFLE
 #: PARTITION per operator, and every micro-batch commit pays a per-store
-#: file write — so a drain inheriting the session's CPU-oriented
-#: ``spark.sql.shuffle.partitions`` (32) pays 32×(stores) commits to hold
-#: ~10⁴–10⁵ state rows (measured on st7 at sf0.1: 5.4 s → 2.0 s going
-#: 32 → 8 partitions, byte-identical output).  State partitioning should
-#: track STATE VOLUME (rate × watermark horizon), not core count; at
-#: production rates raise the env (the value binds per checkpoint
-#: lifetime, and every drain here creates a fresh checkpoint, so the
-#: knob always applies locally).  Results are partition-count-invariant —
-#: the full oracle gate re-verifies that after any change here.
-STATE_PARTITIONS = int(
-    _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
-
-
-@contextmanager
-def sized_state_partitions(spark: SparkSession, n: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` for the lifetime of ONE
-    fresh-checkpoint streaming drain (start + awaitTermination must BOTH
-    run inside — micro-batch planning reads the conf during the drain),
-    restoring the session value after."""
-    n = STATE_PARTITIONS if n is None else n
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+#: file write — so a drain inheriting the session's CPU-oriented shuffle
+#: width (32) pays 32×(stores) commits to hold ~10⁴–10⁵ state rows
+#: (measured on st7 at sf0.1: 5.4 s → 2.0 s going 32 → 8 partitions,
+#: byte-identical output).  State partitioning should track STATE VOLUME
+#: (rate × watermark horizon), not core count; the width binds per
+#: checkpoint lifetime, and every drain here creates a fresh checkpoint, so
+#: it always applies.  Each drain runs its start AND await inside
+#: ``shuffle_partitions(spark, STATE_PARTITIONS)``: micro-batch planning
+#: reads the width during the drain.  Results are partition-count-invariant
+#: — the full oracle gate re-verifies that after any change here.
+STATE_PARTITIONS = 8
 
 
 def stream_source_path(sf_dir: str, table: str) -> tuple[str, str]:
@@ -310,7 +294,7 @@ def incremental_rollup(
             .parquet(out_path)
         )
 
-    with sized_state_partitions(agg.sparkSession):
+    with shuffle_partitions(agg.sparkSession, STATE_PARTITIONS):
         q = (
             agg.writeStream.foreachBatch(write_batch)
             .outputMode("update")
@@ -343,7 +327,7 @@ def start_to_memory(sdf: DataFrame, mode: str = "complete", name: str | None = N
     tests/test_streaming.py walks the EXECUTED streaming physical plans
     (the batch plan audits cannot see them; VERDICT r5 #3)."""
     qname = name or f"mem_{uuid.uuid4().hex[:8]}"
-    with sized_state_partitions(sdf.sparkSession):
+    with shuffle_partitions(sdf.sparkSession, STATE_PARTITIONS):
         q = (
             sdf.writeStream.format("memory")
             .queryName(qname)
@@ -476,7 +460,7 @@ def incremental_user_snapshot(
             os.path.join(base_dir, f"v{epoch_id:09d}")
         )
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .outputMode("update")
@@ -655,7 +639,7 @@ def idempotent_epoch_sink(
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         write_epoch(df, out_path, epoch_id)
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_epoch_"))
@@ -691,7 +675,7 @@ def streaming_cms(events: DataFrame, out_path: str, key_col: str = "user_id") ->
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         cms_build(df, key_col).write.mode("append").parquet(out_path)
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_cms_"))
@@ -723,7 +707,7 @@ def streaming_hll(
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         hll_registers(df, key_col).write.mode("append").parquet(out_path)
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_hll_"))
@@ -803,7 +787,7 @@ def streaming_row_ids(
             f"{out_path}/epoch={int(epoch_id)}"
         )
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint_location)
@@ -846,7 +830,7 @@ def streaming_append_with_compaction(
         if int(epoch_id) % compact_every == compact_every - 1:
             compact_partitions(batch.sparkSession, out_path, "ds", max_files=1)
 
-    with sized_state_partitions(events.sparkSession):
+    with shuffle_partitions(events.sparkSession, STATE_PARTITIONS):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_appcomp_"))
@@ -901,7 +885,7 @@ def streaming_dataset_card(docs_stream: DataFrame, out_path: str) -> None:
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         dataset_card_partial(batch).write.mode("append").parquet(out_path)
 
-    with sized_state_partitions(docs_stream.sparkSession):
+    with shuffle_partitions(docs_stream.sparkSession, STATE_PARTITIONS):
         q = (
             docs_stream.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_card_"))
@@ -993,7 +977,7 @@ def streaming_exact_dedup(docs: DataFrame, out_path: str) -> None:
             "overwrite"
         ).parquet(f"{out_path}/epoch={int(epoch_id)}")
 
-    with sized_state_partitions(docs.sparkSession):
+    with shuffle_partitions(docs.sparkSession, STATE_PARTITIONS):
         q = (
             docs.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dedup_"))
@@ -1096,7 +1080,7 @@ def streaming_neardup_gate(docs: DataFrame, out_path: str) -> None:
             f"{out_path}/kept/epoch={int(epoch_id)}"
         )
 
-    with sized_state_partitions(docs.sparkSession):
+    with shuffle_partitions(docs.sparkSession, STATE_PARTITIONS):
         q = (
             docs.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_neardup_"))
@@ -1167,7 +1151,7 @@ def streaming_shard_manifest(docs: DataFrame, out_path: str) -> None:
             f"{out_path}/epoch={int(epoch_id)}"
         )
 
-    with sized_state_partitions(docs.sparkSession):
+    with shuffle_partitions(docs.sparkSession, STATE_PARTITIONS):
         q = (
             docs.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_shards_"))

@@ -10,6 +10,7 @@ from data_etl_scripts_showcase__spark.operators import dedup as DD
 from data_etl_scripts_showcase__spark.operators import multimodal as MM
 from data_etl_scripts_showcase__spark.operators import similarity as SIM
 from data_etl_scripts_showcase__spark.operators import text as TX
+from data_etl_scripts_showcase__spark.session import spread
 
 
 def docs(spark, rows):
@@ -667,8 +668,8 @@ class TestVideoFrameSample:
             docs(spark, [(i, f"clip {i} " * (i + 1)) for i in range(9)]),
             "doc_id", "text",
         )
-        one = {tuple(r) for r in MM.sample_video_frames(assets, parallelism=1).collect()}
-        many = {tuple(r) for r in MM.sample_video_frames(assets, parallelism=8).collect()}
+        one = {tuple(r) for r in MM.sample_video_frames(assets.repartition(1)).collect()}
+        many = {tuple(r) for r in MM.sample_video_frames(spread(assets)).collect()}
         assert one == many
 
 

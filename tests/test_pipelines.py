@@ -45,6 +45,24 @@ class TestSnapshotSink:
         assert read_snapshot(spark, base, "2026-01-01").count() == 4
         assert read_snapshot(spark, base, "2026-01-02").count() == 2
 
+    def test_snapshot_write_leaves_session_overwrite_mode(self, spark, tmp_path):
+        """Dynamic overwrite is the snapshot write's own option: after a
+        snapshot the session conf reads as before, and a plain static
+        overwrite still replaces every partition of its target."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
+        write_snapshot(spark.range(3), str(tmp_path / "snap3"), "2026-01-01")
+        assert spark.conf.get(key) == before
+
+        base = str(tmp_path / "static")
+        spark.range(4).withColumn("p", F.col("id") % 2).write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(base)
+        spark.range(1).withColumn("p", F.lit(0)).write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(base)
+        assert [tuple(r) for r in spark.read.parquet(base).collect()] == [(0, 0)]
+
 
 class TestQualityGate:
     def test_reconcile_passes_and_raises(self, spark):

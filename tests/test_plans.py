@@ -940,13 +940,12 @@ class TestEngineWideShufflePayloadAudit:
     ALLOW: set[str] = set()
 
     # Scan-stage node classes: a RoundRobinPartitioning exchange whose
-    # subtree is only these is the documented `parallelism` knob — an
-    # explicit repartition of RAW source rows that exists because local
-    # testdata parquet is single-row-group and unsplittable (SCALE.md
-    # "Known local-vs-cluster deltas").  It moves each payload ONCE,
-    # linearly, before any fan-out; at cluster scale the knob is None and
-    # the exchange disappears.  Structurally exempt (not per-query — any
-    # NEW query using the same knob is equally justified).
+    # subtree is only these is `session.spread()` — an explicit
+    # repartition of RAW source rows that exists because local testdata
+    # parquet is single-row-group and unsplittable (SCALE.md "Known
+    # local-vs-cluster deltas").  It moves each payload ONCE, linearly,
+    # before any fan-out.  Structurally exempt (not per-query — any NEW
+    # query calling spread() is equally justified).
     #
     # Round 11: a map-side BROADCAST enrichment below the spread (v7's
     # quality gate: embeddings ⋈ broadcast(ok_ids) before the knn spread)
@@ -1029,20 +1028,18 @@ class TestEngineWideShufflePayloadAudit:
         jplan = bad._jdf.queryExecution().executedPlan()
         assert self._offending_exchanges(jplan, self.WIDE)
 
-    def test_no_wide_payload_through_any_shuffle(self, spark):
+    def test_no_wide_payload_through_any_shuffle(self, spark, monkeypatch):
         """Walks the final executed plan PLUS every checkpointed segment
         (round 11, VERDICT r10 #5/#7a): a localCheckpoint leaf hides its
         upstream plan from this audit, so the engine's ckpt() seam
         captures each segment's executed plan at checkpoint time when
         SPARK_GRAFT_CAPTURE_CKPT_PLANS is set — a wide shuffle upstream
         of any checkpoint is now as visible as one in the final plan."""
-        import os
-
         from data_etl_scripts_showcase__spark import ckpt as CK
 
         registry = load_all()
         offenders = []
-        os.environ["SPARK_GRAFT_CAPTURE_CKPT_PLANS"] = "1"
+        monkeypatch.setenv("SPARK_GRAFT_CAPTURE_CKPT_PLANS", "1")
         try:
             for name in sorted(registry):
                 if name in self.SKIP or name in self.ALLOW:
@@ -1064,21 +1061,18 @@ class TestEngineWideShufflePayloadAudit:
                 if hits:
                     offenders.append(f"{name}: {hits}")
         finally:
-            os.environ.pop("SPARK_GRAFT_CAPTURE_CKPT_PLANS", None)
             CK.clear_captured()
         assert not offenders, "\n".join(offenders)
 
-    def test_checkpoint_segments_are_captured(self, spark):
+    def test_checkpoint_segments_are_captured(self, spark, monkeypatch):
         """Coverage proof for the blind-spot fix: building pr4 (whose
         edge pipeline is checkpointed) under the capture flag must yield
         checkpoint segments, and at least one segment must contain a
         ShuffleExchange — i.e. the audit above really does see plan
         regions the final executedPlan no longer shows."""
-        import os
-
         from data_etl_scripts_showcase__spark import ckpt as CK
 
-        os.environ["SPARK_GRAFT_CAPTURE_CKPT_PLANS"] = "1"
+        monkeypatch.setenv("SPARK_GRAFT_CAPTURE_CKPT_PLANS", "1")
         try:
             CK.clear_captured()
             audit_df(spark, "pr4_cc_alternating")._jdf.queryExecution(
@@ -1088,7 +1082,6 @@ class TestEngineWideShufflePayloadAudit:
                 "Exchange" in jp.toString() for _, jp in CK.CAPTURED
             ), "captured segments show no exchanges — capture is vacuous"
         finally:
-            os.environ.pop("SPARK_GRAFT_CAPTURE_CKPT_PLANS", None)
             CK.clear_captured()
 
 

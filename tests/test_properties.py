@@ -544,22 +544,20 @@ def test_results_independent_of_shuffle_partitioning(spark):
         "x44_distributed_deciles",  # rank arithmetic ntile
         "pr6_khop_neighbor_sample", # hash-ranked neighbor caps
     ]
+    from data_etl_scripts_showcase__spark.session import shuffle_partitions
+
     registry = load_all()
     sf = "/root/testdata/sf0.001"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        results = {}
-        for n_part in ("7", "29"):
-            spark.conf.set("spark.sql.shuffle.partitions", n_part)
+    results = {}
+    for n_part in (7, 29):
+        with shuffle_partitions(spark, n_part):
             for name in SAMPLE:
                 rows = sorted(
                     tuple(r) for r in registry[name].fn(spark, sf).collect()
                 )
                 results.setdefault(name, []).append(rows)
-        mismatched = [n for n, (a, b) in results.items() if a != b]
-        assert not mismatched, mismatched
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    mismatched = [n for n, (a, b) in results.items() if a != b]
+    assert not mismatched, mismatched
 
 
 @FAST

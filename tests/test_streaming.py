@@ -772,34 +772,31 @@ class TestStreamingPhysicalPlans:
 
 
 class TestSizedStatePartitions:
-    """The VERDICT r8 #5 knob: streaming drains pin shuffle partitions to
-    state volume for the drain's lifetime and restore the session value —
-    on success AND on failure (a leaked low value would silently shrink
-    every later batch shuffle in the session)."""
+    """The VERDICT r8 #5 policy: streaming drains run inside
+    ``shuffle_partitions(spark, STATE_PARTITIONS)``, which pins the shuffle
+    width to state volume for the drain's lifetime and restores the session
+    value — on success AND on failure (a leaked low value would silently
+    shrink every later batch shuffle in the session)."""
 
     def test_restores_conf_after_drain_scope(self, spark):
-        from data_etl_scripts_showcase__spark.streaming.jobs import (
-            STATE_PARTITIONS,
-            sized_state_partitions,
-        )
+        from data_etl_scripts_showcase__spark.session import shuffle_partitions
+        from data_etl_scripts_showcase__spark.streaming.jobs import STATE_PARTITIONS
 
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        with sized_state_partitions(spark, 5):
+        with shuffle_partitions(spark, 5):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-        with sized_state_partitions(spark):
+        with shuffle_partitions(spark, STATE_PARTITIONS):
             assert spark.conf.get("spark.sql.shuffle.partitions") == str(
                 STATE_PARTITIONS
             )
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     def test_restores_conf_on_exception(self, spark):
-        from data_etl_scripts_showcase__spark.streaming.jobs import (
-            sized_state_partitions,
-        )
+        from data_etl_scripts_showcase__spark.session import shuffle_partitions
 
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         with __import__("pytest").raises(RuntimeError):
-            with sized_state_partitions(spark, 3):
+            with shuffle_partitions(spark, 3):
                 raise RuntimeError("drain failed")
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev

@@ -31,6 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_etl_scripts_showcase__spark.queries import load_all
+from data_etl_scripts_showcase__spark.session import shuffle_partitions
 from data_etl_scripts_showcase__spark.sources import load_table
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -265,19 +266,15 @@ class TestExactIntegerAllocation:
         self, spark, uniform_sources_dir
     ):
         fn = load_all()["x43_temperature_mixture"].fn
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            results = []
-            for parts in ("1", "7", "32"):
-                spark.conf.set("spark.sql.shuffle.partitions", parts)
+        results = []
+        for parts in (1, 7, 32):
+            with shuffle_partitions(spark, parts):
                 results.append(
                     sorted(
                         (r.source, r.quota)
                         for r in fn(spark, uniform_sources_dir).collect()
                     )
                 )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
         assert results[0] == results[1] == results[2]
 
 
